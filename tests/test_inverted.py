@@ -529,3 +529,118 @@ def test_partial_append_visibility_contract(spark, tmp_path):
     got = bm25_search_inverted(spark, compacted, ["spark", "plans"], k=10).collect()
     want = bm25_search_inverted(spark, clean, ["spark", "plans"], k=10).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def _column_bm25_score(tf_cols, df_cols):
+    """The node-by-node ``Column`` score builder the SQL-text
+    ``bm25_score_expr_for`` replaced — kept here as the bit-exactness
+    reference."""
+    dl_d = F.col("__dl").cast("double")
+    avgdl = F.col("__tot") / F.col("__n")
+    score = None
+    for tf_c, df_c in zip(tf_cols, df_cols):
+        tf_i, df_i = F.col(tf_c), F.col(df_c)
+        idf = F.log(
+            F.lit(1.0) + (F.col("__n") - df_i + F.lit(0.5)) / (df_i + F.lit(0.5))
+        )
+        tfn = (tf_i * F.lit(2.2)) / (
+            tf_i + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * dl_d / avgdl)
+        )
+        score = idf * tfn if score is None else score + idf * tfn
+    return score
+
+
+def test_sql_text_score_is_bit_identical_to_column_score(spark):
+    """The SQL-text score gives the same doubles as the Column-built
+    expression over integer-exact inputs — tf=0, df=N, df=0, one term
+    and many terms — so every oracle stays hash-exact."""
+    import random
+    import struct
+
+    from vector_db_example_spark.operators.bm25 import bm25_score_expr_for
+
+    m = 7
+    rng = random.Random(3)
+    rows = []
+    for n in (1.0, 2.0, 7.0, 1000.0, 123457.0):
+        for _ in range(12):
+            tfs = [float(rng.choice([0, 0, 1, 2, 3, 17])) for _ in range(m)]
+            dfs = [float(rng.choice([0, 1, n, rng.randint(0, int(n))])) for _ in range(m)]
+            dl = rng.randint(0, 400)
+            tot = float(rng.randint(max(dl, 1), 50 * int(n) + dl))
+            rows.append((*tfs, *dfs, dl, n, tot))
+    rows.append((*[0.0] * m, *[1.0] * m, 3, 5.0, 20.0))  # every tf = 0
+    names = [f"__tf{i}" for i in range(m)] + [f"__df{i}" for i in range(m)]
+    schema = ", ".join(f"{c} double" for c in names) + ", __dl int, __n double, __tot double"
+    inputs = spark.createDataFrame(rows, schema)
+
+    for n_terms in (1, 2, m):
+        tf_cols = [f"__tf{i}" for i in range(n_terms)]
+        # a non-positional pairing, as the batch scorer uses
+        df_cols = [f"__df{(i * 3) % m}" for i in range(n_terms)]
+        got = inputs.select(
+            bm25_score_expr_for(tf_cols, df_cols).alias("sql"),
+            _column_bm25_score(tf_cols, df_cols).alias("col"),
+        ).collect()
+        bits = [
+            (struct.pack("<d", r["sql"]), struct.pack("<d", r["col"])) for r in got
+        ]
+        assert all(a == b for a, b in bits), n_terms
+
+
+def test_query_terms_never_reach_sql_text(spark, tmp_path):
+    """Query terms bind as parameters: terms holding quotes, backslashes,
+    parameter-marker and format-brace syntax, comment openers or CJK
+    text give the same top-k from the single search, the batch search
+    and the scan-based scorer — and a would-be injection matches
+    nothing."""
+    from vector_db_example_spark.index.inverted import bm25_search_inverted_batch
+    from vector_db_example_spark.operators.bm25 import bm25_topk
+
+    docs = spark.createDataFrame(
+        [
+            (1, "向量检索 spark vector search"),
+            (2, "spark streams vector rows"),
+            (3, "倒排索引 向量检索 ranking"),
+            (4, "nothing relevant here"),
+        ],
+        "doc_id long, text string",
+    )
+    idx = build_inverted_index(docs, str(tmp_path / "idx"), n_buckets=8)
+    odd = ["it's", "a\\b", ":t0", "{x}", "--", "/*", "?", "x' OR term <> '"]
+    queries = {
+        0: ["spark", *odd, "向量检索"],
+        1: odd,
+        2: ["倒排索引", ":t1", "vector"],
+        3: ["{rows}", "search"],
+    }
+    batch = bm25_search_inverted_batch(spark, idx, queries, k=10).collect()
+    for qid, terms in queries.items():
+        single = [tuple(r) for r in bm25_search_inverted(spark, idx, terms).collect()]
+        scan = [tuple(r) for r in bm25_topk(docs, terms).collect()]
+        from_batch = sorted(
+            ((r.doc_id, r.bm25) for r in batch if r.query_id == qid),
+            key=lambda x: (-x[1], x[0]),
+        )
+        assert single == scan == from_batch, qid
+        assert bool(single) == (qid != 1), qid
+
+
+def test_search_plan_starts_no_job_before_action(spark, tmp_path):
+    """Building a search on a layout without tombstones starts no Spark
+    job: postings and stats are read with persisted schemas (no
+    inference job) and the tombstone probe is a filesystem call, not a
+    failing read."""
+    docs = load_table(spark, SF_SMOKE, "documents")
+    idx = build_inverted_index(docs, str(tmp_path / "idx"), n_buckets=16)
+    sc = spark.sparkContext
+    group = f"bm25-plan-{tmp_path.name}"
+    sc.setJobGroup(group, "bm25 plan build")
+    try:
+        search = bm25_search_inverted(spark, idx, ("vector", "stream"), k=5)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert search.collect()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)

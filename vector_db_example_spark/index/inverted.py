@@ -36,6 +36,17 @@ compaction migrates them — the compactor enriches legacy rows from
 ``doclens/`` (an offline corpus join, amortized across every future
 query) and writes the denormalized format.
 
+Per-request plans (``bm25_search_inverted`` and its batch twin) are
+built from SQL text, not ``Column`` node by node, and user text
+reaches them only as parameters: the pivots and scores are one
+``spark.sql`` statement (``operators.bm25.bm25_plan``) with the query
+terms bound as named parameters, the stats side-table is read with its
+fixed schema (no inference job), and the tombstone probe is a
+filesystem call. Building
+a search therefore starts no Spark job (pinned in tests/test_inverted.py)
+and costs a few dozen py4j round trips — a fixed ~45 plus 4 per term —
+instead of several per ``Column`` node (~2,500 for a 6-term query).
+
 Determinism: `crc32` here is java.util.zip.CRC32 (Spark's `F.crc32`),
 the same polynomial as Python's `zlib.crc32` — the driver computes query
 buckets with zlib and they match the layout's partition values exactly.
@@ -52,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import fsio
 from ..functions.text import extract_tokens
-from ..operators.bm25 import bm25_score_expr, bm25_score_expr_for
+from ..operators.bm25 import bm25_plan, bm25_score_sql, sql_ident
 from ..sources.tables import append_repartition
 
 
@@ -131,6 +142,23 @@ def _read_postings(spark: SparkSession, index: InvertedIndex) -> DataFrame:
         schema = StructType.fromJson(json.loads(index.postings_schema))
         return spark.read.schema(schema).parquet(index.postings_path)
     return spark.read.parquet(index.postings_path)
+
+
+#: The 1-row corpus stats every BM25 writer here produces (build,
+#: append bump, delete decrement, compaction/merge recompute all cast to
+#: double). Reading with it skips schema inference — a footer-reading
+#: Spark job per read, i.e. one job per search before the action.
+STATS_SCHEMA = "__n double, __tot double"
+
+
+def _read_stats(spark: SparkSession, index: InvertedIndex) -> DataFrame:
+    return spark.read.schema(STATS_SCHEMA).parquet(index.stats_path)
+
+
+def _buckets(index: InvertedIndex, terms: Sequence[str]) -> list[int]:
+    """The posting partitions holding ``terms`` (driver-side zlib crc32 —
+    the same polynomial as the layout's ``F.crc32``)."""
+    return sorted({zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in terms})
 
 
 def _postings_carry_dl(index: InvertedIndex) -> bool:
@@ -216,6 +244,35 @@ def build_inverted_index(
     return index
 
 
+def _bm25_layout_plan(
+    spark: SparkSession, index: InvertedIndex, terms: Sequence[str], select: str
+) -> DataFrame:
+    """``operators.bm25.bm25_plan`` over the layout — the one plan builder
+    of the single and the batch search. The postings read prunes to the
+    terms' bucket partitions at the source (``PartitionFilters``, pinned
+    in tests/test_plans.py; bucket ids are driver-computed ints) and the
+    term filter inside ``bm25_plan`` is pushed into the scan. Postings
+    carrying ``__dl`` score from the SAME pruned read as their tf, so no
+    operand in the plan is corpus-sized; a legacy layout still joins
+    ``doclens/`` (module docstring — one compaction migrates it).
+
+    Building the plan starts no Spark job and costs a few dozen JVM
+    calls: the two reads use persisted schemas (no inference job), the
+    tombstone probe is a filesystem call, and pivots and scores are SQL
+    text with the terms as parameters."""
+    bucket_in = ", ".join(str(b) for b in _buckets(index, terms))
+    posts = _live(
+        index, _read_postings(spark, index).where(f"bucket IN ({bucket_in})")
+    )
+    lens = (
+        None if _postings_carry_dl(index) else spark.read.parquet(index.doclens_path)
+    )
+    return bm25_plan(
+        spark, terms, posts, _read_stats(spark, index), select,
+        id_col=index.id_col, tf="tf", lens=lens,
+    )
+
+
 def bm25_search_inverted(
     spark: SparkSession,
     index: InvertedIndex,
@@ -224,63 +281,25 @@ def bm25_search_inverted(
 ) -> DataFrame:
     """Top-``k`` by BM25, reading ONLY the query terms' posting-list
     partitions. Identical scores to the scan-based
-    ``operators.bm25.bm25_topk`` (shared score expression over the same
-    integer-exact inputs) — which is what lets the driver oracle state
-    exact parity with the full-scan SQL.
+    ``operators.bm25.bm25_topk`` (shared plan builder and score text over
+    the same integer-exact inputs) — which is what lets the driver oracle
+    state exact parity with the full-scan SQL.
 
-    Plan shape: on denormalized layouts (``__dl`` on the posting rows)
-    the candidate's doc length comes out of the SAME pruned postings
-    read as its tf — no operand in the plan is corpus-sized (the
-    doclens join a legacy layout still takes re-shuffles the whole
-    per-doc length table per query at scale; module docstring, and one
-    compaction migrates)."""
+    Plan shape: ``_bm25_layout_plan`` (pruned read, broadcast df/stats
+    rows, no corpus-sized operand on denormalized layouts), then
+    ``ORDER BY … LIMIT k`` → TakeOrderedAndProject."""
     terms = list(dict.fromkeys(query_terms))
     if not terms:
         raise ValueError("query_terms must be non-empty")
-    id_col = index.id_col
-
-    buckets = sorted({zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in terms})
-    posts = _live(
-        index,
-        _read_postings(spark, index)
-        .filter(F.col("bucket").isin(buckets))  # partition pruning
-        .filter(F.col("term").isin(terms)),  # within-bucket residual filter
+    i_d = sql_ident(index.id_col)
+    score = bm25_score_sql(
+        [f"__tf{i}" for i in range(len(terms))],
+        [f"__df{i}" for i in range(len(terms))],
     )
-
-    carry_dl = _postings_carry_dl(index)
-    tf_aggs = [
-        F.sum(F.when(F.col("term") == t, F.col("tf")).otherwise(0))
-        .cast("double")
-        .alias(f"__tf{i}")
-        for i, t in enumerate(terms)
-    ]
-    if carry_dl:
-        # every posting row of a doc carries the same __dl; max picks it
-        # without widening the groupBy key
-        tf_aggs.append(F.max("__dl").alias("__dl"))
-    tf = posts.groupBy(id_col).agg(*tf_aggs)
-    dfs = posts.groupBy().agg(
-        *[
-            F.count_distinct(F.when(F.col("term") == t, F.col(id_col)))
-            .cast("double")
-            .alias(f"__df{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
-    stats = spark.read.parquet(index.stats_path)
-
-    base = (
-        tf
-        if carry_dl
-        else tf.join(spark.read.parquet(index.doclens_path), id_col)
-    )
-    scored = base.crossJoin(F.broadcast(dfs)).crossJoin(F.broadcast(stats))
-    return (
-        scored.select(
-            F.col(id_col), F.round(bm25_score_expr(len(terms)), 6).alias("bm25")
-        )
-        .orderBy(F.col("bm25").desc(), F.col(id_col).asc())
-        .limit(k)
+    return _bm25_layout_plan(
+        spark, index, terms,
+        f"SELECT {i_d}, round({score}, 6) AS bm25 FROM scored"
+        f" ORDER BY bm25 DESC, {i_d} ASC LIMIT {int(k)}",
     )
 
 
@@ -370,7 +389,7 @@ def append_to_inverted_index(index: InvertedIndex, docs: DataFrame) -> None:
             .cast("double")
             .alias("_inc_tot"),
         )
-        .crossJoin(spark.read.parquet(index.stats_path))
+        .crossJoin(_read_stats(spark, index))
         .select(
             (F.col("_inc_n") + F.col("__n")).alias("__n"),
             (F.col("_inc_tot") + F.col("__tot")).alias("__tot"),
@@ -399,11 +418,10 @@ def sparse_dot_topk(
         raise ValueError("query_weights must be non-empty")
     terms = list(query_weights)
     id_col = index.id_col
-    buckets = sorted({zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in terms})
     posts = _live(
         index,
         _read_postings(spark, index)
-        .filter(F.col("bucket").isin(buckets))
+        .filter(F.col("bucket").isin(_buckets(index, terms)))
         .filter(F.col("term").isin(terms)),
     )
     tf = posts.groupBy(id_col).agg(
@@ -545,26 +563,26 @@ def delete_from_inverted_index(index: InvertedIndex, ids) -> int:
     victims.select(index.id_col).write.mode("append").parquet(
         f"{index.path}/tombstones"
     )
-    old = spark.read.parquet(index.stats_path).collect()[0]
+    old = _read_stats(spark, index).collect()[0]
     spark.createDataFrame(
         [(float(old["__n"]) - float(stats_delta["__n"]),
           float(old["__tot"]) - float(stats_delta["__tot"]))],
-        "__n double, __tot double",
+        STATS_SCHEMA,
     ).write.mode("overwrite").parquet(index.stats_path)
     return int(stats_delta["__n"])
 
 
 def _live(index: InvertedIndex, df: DataFrame) -> DataFrame:
     """Apply deletion vectors: broadcast anti-join against the tombstone
-    table (absent ⇒ no-op)."""
-    from pyspark.sql.utils import AnalysisException
-
-    spark = df.sparkSession
-    try:
-        tombs = spark.read.parquet(f"{index.path}/tombstones")
-    except AnalysisException:  # no deletes yet
+    table (absent ⇒ no-op). Probed with ``fsio.exists`` like the IVF
+    ``_ivf_live``: a failed ``spark.read`` as the "no deletes" signal cost
+    a full analysis and a thrown ``AnalysisException`` per search."""
+    tombs = f"{index.path}/tombstones"
+    if not fsio.exists(tombs):
         return df
-    return df.join(F.broadcast(tombs), index.id_col, "left_anti")
+    return df.join(
+        F.broadcast(df.sparkSession.read.parquet(tombs)), index.id_col, "left_anti"
+    )
 
 
 def build_positional_index(
@@ -688,11 +706,10 @@ def phrase_search_positional(
         raise ValueError("phrase must be non-empty")
     id_col = index.id_col
     uniq = list(dict.fromkeys(terms))
-    buckets = sorted({zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in uniq})
     posts = _live(
         index,
         _read_postings(spark, index)
-        .filter(F.col("bucket").isin(buckets))
+        .filter(F.col("bucket").isin(_buckets(index, uniq)))
         .filter(F.col("term").isin(uniq))
         # distinct: a replayed append (the at-least-once crash window)
         # lays down byte-identical (term, doc, positions) rows twice,
@@ -735,9 +752,10 @@ def bm25_search_inverted_batch(
     """N lexical queries against the layout in ONE scan — the lexical
     twin of the IVF batch search's amortized-scan pattern: the postings
     read prunes to the UNION of every query's term buckets, ONE
-    groupBy(doc) pivots every distinct term's tf into its own column,
-    each query's score is its own fixed-order expression over its terms'
-    columns (bit-exact, same discipline as the single-query path), and a
+    groupBy(doc) pivots every distinct term's tf into its own column
+    (``_bm25_layout_plan``, shared with the single search), each query's
+    score is its own fixed-order expression over its terms' columns
+    (bit-exact, same discipline as the single-query path), and a
     per-query rank window takes top-k. Scan + doc-shuffle cost is paid
     once for the whole batch.
 
@@ -745,79 +763,36 @@ def bm25_search_inverted_batch(
     """
     if not queries:
         raise ValueError("queries must be non-empty")
-    qterms = {qid: list(dict.fromkeys(ts)) for qid, ts in queries.items()}
-    all_terms = sorted({t for ts in qterms.values() for t in ts})
+    qterms = [(int(qid), list(dict.fromkeys(ts))) for qid, ts in queries.items()]
+    if not all(ts for _, ts in qterms):
+        raise ValueError("every query needs at least one term")
+    all_terms = sorted({t for _, ts in qterms for t in ts})
     tcol = {t: i for i, t in enumerate(all_terms)}
-    id_col = index.id_col
-
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % index.n_buckets for t in all_terms}
+    i_d = sql_ident(index.id_col)
+    scores = ", ".join(
+        bm25_score_sql([f"__tf{tcol[t]}" for t in ts], [f"__df{tcol[t]}" for t in ts])
+        + f" AS __s{j}"
+        for j, (_, ts) in enumerate(qterms)
     )
-    posts = _live(
-        index,
-        _read_postings(spark, index)
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term").isin(all_terms)),
-    )
-    carry_dl = _postings_carry_dl(index)
-    tf_aggs = [
-        F.sum(F.when(F.col("term") == t, F.col("tf")).otherwise(0))
-        .cast("double")
-        .alias(f"__tf{tcol[t]}")
-        for t in all_terms
-    ]
-    if carry_dl:
-        tf_aggs.append(F.max("__dl").alias("__dl"))
-    tf = posts.groupBy(id_col).agg(*tf_aggs)
-    dfs = posts.groupBy().agg(
-        *[
-            F.count_distinct(F.when(F.col("term") == t, F.col(id_col)))
-            .cast("double")
-            .alias(f"__df{tcol[t]}")
-            for t in all_terms
-        ]
-    )
-    base = (
-        (
-            tf
-            if carry_dl
-            else tf.join(spark.read.parquet(index.doclens_path), id_col)
-        )
-        .crossJoin(F.broadcast(dfs))
-        .crossJoin(F.broadcast(spark.read.parquet(index.stats_path)))
-    )
-    scored = base.select(
-        F.col(id_col),
-        *[
-            bm25_score_expr_for(
-                [f"__tf{tcol[t]}" for t in ts],
-                [f"__df{tcol[t]}" for t in ts],
-            ).alias(f"__s{qid}")
-            for qid, ts in qterms.items()
-        ],
-    )
-    stack_args = ", ".join(f"{int(qid)}, __s{qid}" for qid in qterms)
-    long = scored.select(
-        F.col(id_col),
-        F.expr(f"stack({len(qterms)}, {stack_args}) AS (query_id, __raw)"),
-    )
+    stack = ", ".join(f"{qid}, __s{j}" for j, (qid, _) in enumerate(qterms))
     # a doc with NO terms of a given query scores exactly 0 there (and a
     # doc with >=1 scores strictly positive — Lucene idf > 0): filter the
     # RAW score so each query's result holds exactly the docs containing
     # at least one of ITS terms, matching the single-query path
-    long = long.filter(F.col("__raw") > 0).withColumn(
-        "bm25", F.round(F.col("__raw"), 6)
+    return _bm25_layout_plan(spark, index, all_terms, f"""
+SELECT query_id, {i_d}, bm25 FROM (
+  SELECT *, row_number() OVER (
+    PARTITION BY query_id ORDER BY bm25 DESC, {i_d} ASC) AS rk
+  FROM (
+    SELECT {i_d}, query_id, round(__raw, 6) AS bm25
+    FROM (
+      SELECT {i_d}, stack({len(qterms)}, {stack}) AS (query_id, __raw)
+      FROM (SELECT {i_d}, {scores} FROM scored)
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("bm25").desc(), F.col(id_col).asc()
-    )
-    return (
-        long.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", id_col, "bm25")
-    )
+    WHERE __raw > 0
+  )
+)
+WHERE rk <= {int(k)}""")
 
 
 def merge_inverted_indexes(

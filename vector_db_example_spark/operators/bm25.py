@@ -26,13 +26,27 @@ every floating-point input is integer-exact (term counts, doc lengths,
 document frequencies, N), and the per-document score is a FIXED-ORDER
 sum of per-term contributions (explicit ``c1 + c2 + ... + cn`` columns,
 never an ``agg(sum(...))`` over doubles whose partition order could vary).
+
+Plan-building rule (shared with ``index/inverted.py``): a per-request
+plan is built from SQL TEXT in one ``spark.sql`` call, not ``Column``
+node by node, and user text reaches it only as a parameter. Every
+``F.col``/``F.lit``/operator on a Python ``Column`` costs py4j round
+trips — ``F.lit`` takes three, about 0.3 ms on a 4-core host — so a
+6-term inverted search built node by node took ~2,500 round trips
+(~410 ms), more than running the finished plan. Built as below it takes
+~70 (45 fixed plus 4 per term; ~120 ms, most of it Spark's own parse and
+analysis). ``bm25_plan`` emits the tf/df pivots and the score as one
+``spark.sql`` statement over the caller's candidate rows; the query
+terms bind as named parameters ``:t0 .. :tn`` (``spark.sql(...,
+args=...)``), never spliced into the text, so a term holding a quote, a
+brace, ``:name`` or ``--`` is just a string to match.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.text import extract_tokens
 
@@ -40,6 +54,91 @@ from ..functions.text import extract_tokens
 #: full-text-search defaults).
 K1 = 1.2
 B = 0.75
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier that survives ``spark.sql``'s
+    ``{frame}`` formatting (backticks doubled, braces doubled)."""
+    quoted = "`" + name.replace("`", "``") + "`"
+    return quoted.replace("{", "{{").replace("}", "}}")
+
+
+def bm25_score_sql(tf_cols: Sequence[str], df_cols: Sequence[str]) -> str:
+    """SQL text of the BM25 score over named tf/df column pairs (doubles
+    of exact integers), ``__dl`` (int token count) and ``__n``/``__tot``
+    (double corpus stats). Literals are DOUBLE literals written as in the
+    oracle SQL (``2.2D`` not K1+1.0, ``0.25D`` not 1-B) so both engines
+    round the same decimal text to the same double; ``ln`` is the
+    natural log ``F.log`` compiles to; the per-term contributions sum in
+    one fixed left-to-right order."""
+    dl = "CAST(__dl AS DOUBLE)"
+    contribs = [
+        f"(ln(1.0D + (__n - {df} + 0.5D) / ({df} + 0.5D))"
+        f" * (({tf} * 2.2D) / ({tf} + 1.2D * (0.25D + 0.75D * {dl} / (__tot / __n)))))"
+        for tf, df in zip(tf_cols, df_cols)
+    ]
+    return " + ".join(contribs)
+
+
+def bm25_score_expr_for(tf_cols: Sequence[str], df_cols: Sequence[str]) -> Column:
+    """The BM25 score as ONE ``F.expr`` over named tf/df column pairs
+    (``bm25_score_sql``) — one JVM call however many terms."""
+    return F.expr(bm25_score_sql(tf_cols, df_cols))
+
+
+def bm25_plan(
+    spark: SparkSession,
+    terms: Sequence[str],
+    rows: DataFrame,
+    stats: DataFrame,
+    select: str,
+    *,
+    id_col: str,
+    tf: str,
+    lens: DataFrame | None = None,
+) -> DataFrame:
+    """The one BM25 plan builder (scan scorer, inverted single and batch
+    search): ``select`` runs over a relation ``scored`` holding, per doc
+    with ≥1 of ``terms``, ``id_col``, ``__tf{i}``/``__df{i}`` for
+    ``terms[i]``, ``__dl``, ``__n`` and ``__tot``.
+
+    ``rows`` are candidate ``(id_col, term, …)`` rows; ``tf`` is the SQL
+    text of one row's term count (``"1"`` for exploded tokens, ``"tf"``
+    for postings). Doc lengths come from ``lens`` ``(id_col, __dl)`` when
+    given, else from the ``__dl`` the rows carry (``max`` — every row of
+    a doc carries the same value). ``stats`` is the 1-row
+    ``(__n, __tot)``; it and the 1-row df aggregate reach the scorer as
+    broadcasts. Per-term tf pivots (one groupBy on the doc) and
+    document frequencies (``count(DISTINCT …)`` over the same filtered
+    rows) match the term as the parameter ``:t{i}`` (module docstring)."""
+    i_d = sql_ident(id_col)
+    marks = ", ".join(f":t{i}" for i in range(len(terms)))
+    tfs = "".join(
+        f", CAST(sum(CASE WHEN term = :t{i} THEN {tf} ELSE 0 END) AS DOUBLE) AS __tf{i}"
+        for i in range(len(terms))
+    )
+    dfs = ", ".join(
+        f"CAST(count(DISTINCT CASE WHEN term = :t{i} THEN {i_d} END) AS DOUBLE) AS __df{i}"
+        for i in range(len(terms))
+    )
+    frames = {"rows": rows, "stats": stats}
+    if lens is None:
+        tfs += ", max(__dl) AS __dl"
+        join = ""
+    else:
+        frames["lens"] = lens
+        join = f"JOIN {{lens}} USING ({i_d})"
+    query = f"""
+WITH hits AS (SELECT * FROM {{rows}} WHERE term IN ({marks})),
+tfs AS (SELECT {i_d}{tfs} FROM hits GROUP BY {i_d}),
+dfs AS (SELECT {dfs} FROM hits),
+scored AS (
+  SELECT /*+ BROADCAST(dfs, stats) */ *
+  FROM tfs {join} CROSS JOIN dfs CROSS JOIN {{stats}} AS stats
+)
+{select}"""
+    args = {f"t{i}": t for i, t in enumerate(terms)}
+    return spark.sql(query, args, **frames)
 
 
 def bm25_scores(
@@ -54,93 +153,36 @@ def bm25_scores(
 
     IDF uses the Lucene form ``ln(1 + (N - df + 0.5) / (df + 0.5))``
     (always positive, unlike the raw Robertson IDF).
+
+    Per-doc tf for each query term is pivoted into fixed columns (one
+    shuffle keyed on the doc) and the per-term document frequencies are
+    ONE 1-row aggregate over the same term-filtered token rows; both
+    come from ``bm25_plan``.
     """
     terms = list(dict.fromkeys(query_terms))
     if not terms:
         raise ValueError("query_terms must be non-empty")
 
-    tok = docs.select(
-        id_col, F.explode(extract_tokens(F.col(text_col))).alias("term")
-    )
-    tokq = tok.filter(F.col("term").isin(terms))
-
-    # Per-doc tf for each query term, pivoted into fixed columns so the
-    # score sum below has one deterministic order.
-    tf = tokq.groupBy(id_col).agg(
-        *[
-            F.sum(F.when(F.col("term") == t, 1).otherwise(0))
-            .cast("double")
-            .alias(f"__tf{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
-
-    # Per-term document frequencies in ONE 1-row aggregate over the
-    # (already term-filtered) posting rows — count_distinct over a when()
-    # counts distinct non-null doc ids.
-    dfs = tokq.groupBy().agg(
-        *[
-            F.count_distinct(F.when(F.col("term") == t, F.col(id_col)))
-            .cast("double")
-            .alias(f"__df{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
+    toks = extract_tokens(F.col(text_col))
+    tok = docs.select(id_col, F.explode(toks).alias("term"))
     # N and total token count come from the un-exploded side (a doc with
     # zero tokens must still count toward both). Integer sums stay exact;
     # the double casts happen once at the end.
-    dl = docs.select(
-        F.col(id_col), F.size(extract_tokens(F.col(text_col))).alias("__dl")
-    )
+    dl = docs.select(F.col(id_col), F.size(toks).alias("__dl"))
     totals = docs.select(
         F.count(F.lit(1)).cast("double").alias("__n"),
-        F.sum(F.size(extract_tokens(F.col(text_col)))).cast("double").alias("__tot"),
+        F.sum(F.size(toks)).cast("double").alias("__tot"),
     )
-
-    scored = (
-        tf.join(dl, id_col)
-        .crossJoin(F.broadcast(dfs))
-        .crossJoin(F.broadcast(totals))
+    score = bm25_score_sql(
+        [f"__tf{i}" for i in range(len(terms))],
+        [f"__df{i}" for i in range(len(terms))],
     )
-
-    return scored.select(F.col(id_col), bm25_score_expr(len(terms)).alias("bm25"))
-
-
-def bm25_score_expr(n_terms: int):
-    """The BM25 score Column over the pivoted inputs ``__tf{i}``,
-    ``__df{i}`` (doubles of exact integers), ``__dl`` (int token count),
-    ``__n``/``__tot`` (double corpus stats) — shared by the scan-based
-    scorer above and the inverted-index scorer (index/inverted.py) so
-    both engines and both access paths produce bit-identical doubles."""
-    return bm25_score_expr_for(
-        [f"__tf{i}" for i in range(n_terms)],
-        [f"__df{i}" for i in range(n_terms)],
+    i_d = sql_ident(id_col)
+    return bm25_plan(
+        docs.sparkSession, terms, tok, totals,
+        f"SELECT {i_d}, {score} AS bm25 FROM scored",
+        id_col=id_col, tf="1", lens=dl,
     )
-
-
-def bm25_score_expr_for(tf_cols: Sequence[str], df_cols: Sequence[str]):
-    """BM25 score from explicitly-named tf/df column pairs (the batched
-    scorer pivots MANY queries' terms side by side, so names can't be
-    positional). Literal constants appear in the SAME literal form as in
-    the oracle SQL (2.2 not K1+1.0, 0.25 not 1-B) so both engines round
-    the same decimal text to the same double; the per-term contributions
-    sum in one fixed left-to-right order."""
-    dl_d = F.col("__dl").cast("double")
-    avgdl = F.col("__tot") / F.col("__n")
-    contribs = []
-    for tf_c, df_c in zip(tf_cols, df_cols):
-        tf_i, df_i = F.col(tf_c), F.col(df_c)
-        idf = F.log(
-            F.lit(1.0) + (F.col("__n") - df_i + F.lit(0.5)) / (df_i + F.lit(0.5))
-        )
-        tfn = (tf_i * F.lit(2.2)) / (
-            tf_i + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * dl_d / avgdl)
-        )
-        contribs.append(idf * tfn)
-    score = contribs[0]
-    for c in contribs[1:]:
-        score = score + c
-    return score
 
 
 def bm25_topk(

@@ -28,6 +28,7 @@ request, not a table).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -44,8 +45,12 @@ OVERFETCH_FACTOR = 3  # reference searches limit=top_k*3 then re-limits
 
 
 def _vector_literal(vec) -> Column:
-    """A query vector as a Catalyst array<double> literal (broadcast by value)."""
-    return F.array(*[F.lit(float(x)) for x in vec])
+    """A query vector as a Catalyst array<double> literal (broadcast by
+    value), built in ONE ``F.lit`` call: an ``F.array`` of per-element
+    ``F.lit`` columns took ``dim + 1`` column calls (three py4j round
+    trips per ``F.lit``) per request. The float64 values are the same
+    ``float(x)`` doubles either way."""
+    return F.lit(np.asarray(vec, dtype=np.float64))
 
 
 def knn_exact(
@@ -161,7 +166,6 @@ def knn_batch(
             score_threshold, metric, id_col, with_payload,
         )
 
-    import numpy as np
     import pandas as pd
 
     # Canonical output column ORDER, shared by the arrow path and the
